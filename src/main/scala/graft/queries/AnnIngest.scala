@@ -96,31 +96,29 @@ object AnnIngest {
               .select(col("vec_id"), col("embedding")),
             work, in, s"arrivals_$c", baseMtime + c * 60000L)
         }
-        val q = spark.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "vec_id LONG, embedding ARRAY<FLOAT>"))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(in.toString)
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-              assign(batch
-                .withColumn("features",
-                  org.apache.spark.ml.functions.array_to_vector(col("embedding")))
-                .withColumn("norm2", expr("dot_product(embedding, embedding)")))
-                .withColumn("batch", lit(batchId))
-                .write
-                .partitionBy("batch")
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(s"$o/ingest")
-              ()
-          }
-          .option("checkpointLocation", s"$work/chk")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
+        StreamRun(spark) {
+          spark.readStream
+            .schema(org.apache.spark.sql.types.StructType.fromDDL(
+              "vec_id LONG, embedding ARRAY<FLOAT>"))
+            .option("maxFilesPerTrigger", "1")
+            .parquet(in.toString)
+            .writeStream
+            .foreachBatch {
+              (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+                assign(batch
+                  .withColumn("features",
+                    org.apache.spark.ml.functions.array_to_vector(col("embedding")))
+                  .withColumn("norm2", expr("dot_product(embedding, embedding)")))
+                  .withColumn("batch", lit(batchId))
+                  .write
+                  .partitionBy("batch")
+                  .mode(org.apache.spark.sql.SaveMode.Overwrite)
+                  .option("partitionOverwriteMode", "dynamic")
+                  .parquet(s"$o/ingest")
+                ()
+            }
+            .option("checkpointLocation", s"$work/chk")
+        }
         // "incremental" must be real: each staged file became its own batch
         val batchDirs = Option(new java.io.File(o, "ingest").listFiles())
           .getOrElse(Array.empty).count(f => f.isDirectory && f.getName.startsWith("batch="))

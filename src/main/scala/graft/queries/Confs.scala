@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Session-conf scoping shared by every set-and-restore site (code-review
   * r13 #4: five hand-rolled copies of the same getOption/set/try-finally
   * dance, each a separate chance to fumble the restore-Some/unset-None
-  * branch). One implementation; the named wrappers (event read confs,
-  * state-store provider) keep their docs and delegate here.
+  * branch). One implementation; [[StreamRun]] scopes every stream row's
+  * confs through it.
   */
 object Confs {
 

@@ -58,13 +58,17 @@ object Events {
     if (!spark.conf.getOption(NtzKey).contains("false")) spark.conf.set(NtzKey, "false")
   }
 
-  /** Set-and-restore wrapper for the event read confs (ADVICE r6 #4): used
-    * by the STREAMING queries, whose execution completes inside the body,
-    * so restoring cannot break anything downstream.
+  /** The event read confs as a set-and-restore scope (ADVICE r6 #4): the
+    * STREAMING rows pass them to [[StreamRun]], whose execution completes
+    * inside the scope, so restoring what [[eventsStream]] pins cannot break
+    * anything downstream.
     */
-  private def withEventReadConfs[T](spark: SparkSession)(body: => T): T =
-    Confs.withConfs(spark, NanosKey -> "true", NtzKey -> "false")(body)
+  private val EventReadConfs = Seq(NanosKey -> "true", NtzKey -> "false")
 
+  /** The scope of an events stream row: the read confs plus the
+    * [[StreamRun.partitions]] pin of 4 state partitions.
+    */
+  private val EventStreamConfs = EventReadConfs :+ StreamRun.partitions(4)
 
   /** Schema-adaptive normalization of `ts` to the canonical `tus` column:
     * microseconds since epoch as BIGINT, == DuckDB `epoch_us(ts)` exactly.
@@ -116,8 +120,8 @@ object Events {
     * the returned frame is lazy, and the parquet scan re-reads conf when
     * the plan executes (file-source readers capture SQLConf at physical
     * planning, i.e. action time), so a restore would make later execution
-    * of the returned frame fail. The fully-executed streaming queries use
-    * [[withEventReadConfs]] instead and leak nothing.
+    * of the returned frame fail. The fully-executed streaming queries run
+    * inside [[EventReadConfs]] instead and leak nothing.
     */
   private[graft] def readEvents(spark: SparkSession, dir: String): DataFrame = {
     pinEventReadConfs(spark)
@@ -125,11 +129,12 @@ object Events {
   }
 
   /** File-source stream over events.parquet with the same `tus`
-    * normalization as [[readEvents]] — schema resolved under the pinned
-    * confs, one file per micro-batch. Callers run inside
-    * [[withEventReadConfs]].
+    * normalization as [[readEvents]] — read confs pinned the same way,
+    * schema resolved under them, one file per micro-batch. The gate rows
+    * run it inside [[EventReadConfs]], which restores the pins.
     */
-  private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame = {
+    pinEventReadConfs(spark)
     val schema = spark.read.parquet(t(dir, "events")).schema
     // The file source wants a directory; a [t] character class turns the
     // exact file path into a glob so basePath resolves to the parent dir.
@@ -138,23 +143,6 @@ object Events {
       .option("maxFilesPerTrigger", "1")
       .option("basePath", dir)
       .parquet(s"$dir/events.parque[t]"))
-  }
-
-  /** Streaming executions pin shuffle partitions (= state-store count) to a
-    * small constant for the duration of the query (round-3 verdict #3): a
-    * stateful micro-batch commits one state store per shuffle partition, so
-    * 32 session-level partitions meant 32 store commits per micro-batch of
-    * toy-scale input — pure overhead with 5× run-to-run spread. The gate
-    * semantics are partition-independent by construction (fixed-point sums,
-    * per-key state), so the constant only affects cost. On a real cluster
-    * the stream's partition count is sized to keyspace × executor count at
-    * stream definition time, exactly as done here.
-    */
-  private def withStreamPartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
   }
 
   private def windowAgg(df: DataFrame): DataFrame =
@@ -173,19 +161,9 @@ object Events {
     * On bounded input this must hash-match the batch oracle exactly.
     */
   val streamWindows: QueryDef = QueryDef(oracle) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      val stream = eventsStream(spark, dir)
-      withStreamPartitions(spark, 4) {
-        val q = windowAgg(stream).writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName("graft_stream_windows")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_stream_windows", "complete", EventStreamConfs: _*) {
+      windowAgg(eventsStream(spark, dir))
     }
-    spark.table("graft_stream_windows")
   }
 
   /** Gap-based sessionization (30-minute gap) in its batch form: a
@@ -285,34 +263,17 @@ object Events {
       |      FROM ($sessionCoreSql) g) s,
       |     (SELECT max(epoch_us(ts) // 1000) AS wm_ms FROM events) w
       |WHERE s.end_gap_us <= w.wm_ms * 1000""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      val stream = eventsStream(spark, dir)
+    StreamRun.memory(spark, "graft_session_window_stream", "append", EventStreamConfs: _*) {
+      eventsStream(spark, dir)
         .select(col("user_id"), timestamp_micros(col("tus")).as("tts"), col("value"))
         .withWatermark("tts", "0 seconds")
-      withStreamPartitions(spark, 4) {
-        val q = stream
-          .groupBy(session_window(col("tts"), "30 minutes").as("sw"), col("user_id"))
-          .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
-          .select(col("user_id"),
-            unix_micros(col("sw.start")).as("start_us"),
-            unix_micros(col("sw.end")).as("end_gap_us"),
-            col("n"), col("sum_value"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_session_window_stream")
-          // AvailableNow, not processAllAvailable polling (VERDICT r10 #1):
-          // the trigger snapshots the file list at start, runs exactly that
-          // plan (one data batch per file + the watermark-commit batch) and
-          // self-terminates — a deterministic batch count with no 100 ms
-          // poll loop in the timed path.
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
+        .groupBy(session_window(col("tts"), "30 minutes").as("sw"), col("user_id"))
+        .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
+        .select(col("user_id"),
+          unix_micros(col("sw.start")).as("start_us"),
+          unix_micros(col("sw.end")).as("end_gap_us"),
+          col("n"), col("sum_value"))
     }
-    spark.table("graft_session_window_stream")
   }
 
   /** The stateful-streaming twin of [[sessionize]] as a driver-gate row:
@@ -347,21 +308,12 @@ object Events {
 
   val sessionizeStream: QueryDef = QueryDef(sessionizeStreamOracle) {
     (spark, dir) =>
-    // withEventReadConfs wraps the whole execution: Sessionize.sessions
-    // pins the confs itself (for direct callers), but the wrapper's restore
-    // here means this query leaves no session-conf residue either way.
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        val q = graft.streaming.Sessionize.sessions(spark, dir).writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_sessionize_stream")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    // EventReadConfs scopes the whole execution: eventsStream pins the
+    // confs itself (for direct callers of Sessionize.sessions), but the
+    // scope's restore means this query leaves no session-conf residue.
+    StreamRun.memory(spark, "graft_sessionize_stream", "append", EventStreamConfs: _*) {
+      graft.streaming.Sessionize.sessions(spark, dir)
     }
-    spark.table("graft_sessionize_stream")
       .select(col("user_id"), col("n"), col("start_us"), col("end_us"),
         round(col("sum_fixed") / 10000.0, 2).as("sum_value"))
   }
@@ -375,21 +327,10 @@ object Events {
     * move a single session boundary.
     */
   val sessionizeTws: QueryDef = QueryDef(sessionizeStreamOracle) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        withStateStoreProvider(spark,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          val q = graft.streaming.SessionizeTws.sessions(spark, dir).writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName("graft_sessionize_tws")
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
-      }
+    StreamRun.memory(spark, "graft_sessionize_tws", "append",
+      EventStreamConfs :+ StreamRun.RocksDb: _*) {
+      graft.streaming.SessionizeTws.sessions(spark, dir)
     }
-    spark.table("graft_sessionize_tws")
       .select(col("user_id"), col("n"), col("start_us"), col("end_us"),
         round(col("sum_fixed") / 10000.0, 2).as("sum_value"))
   }
@@ -436,21 +377,10 @@ object Events {
     */
   val streamDedup: QueryDef = QueryDef(
     "SELECT DISTINCT user_id, event_type FROM events") { (spark, dir) =>
-    withEventReadConfs(spark) {
-      val stream = eventsStream(spark, dir)
-      withStreamPartitions(spark, 4) {
-        val q = stream.select(col("user_id"), col("event_type"))
-          .dropDuplicates("user_id", "event_type")
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_dedup")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_stream_dedup", "append", EventStreamConfs: _*) {
+      eventsStream(spark, dir).select(col("user_id"), col("event_type"))
+        .dropDuplicates("user_id", "event_type")
     }
-    spark.table("graft_stream_dedup")
   }
 
   /** Chunk width for the bounded-state streaming dedup: 10 days of event
@@ -546,30 +476,17 @@ object Events {
     val out = prepareWmChunks(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, event_type STRING, ts TIMESTAMP")
-    withStreamPartitions(spark, 4) {
-      val q = spark.readStream
+    StreamRun.memory(spark, "graft_stream_dedup_wm", "append", StreamRun.partitions(4)) {
+      spark.readStream
         .schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(out)
         .withWatermark("ts", "48 hours")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("emit_tus"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName("graft_stream_dedup_wm")
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
     }
-    spark.table("graft_stream_dedup_wm")
   }
 
-  /** Write-once preparation of the per-chunk rep dataset: one parquet FILE
-    * per 10-day chunk, named in chunk order with strictly increasing
-    * mtimes (the file stream source takes files oldest-first). Exposed
-    * private[graft] so StreamDedupWmSpec can replay the same input.
-    */
   /** The chunk-prep aggregation itself: one map-side-combinable groupBy of
     * the raw events projected to (user_id, event_type, ts) — PlanSpec pins
     * the single-exchange hash-aggregate shape and the 3-column read.
@@ -583,28 +500,36 @@ object Events {
       .select(col("user_id"), col("event_type"),
         timestamp_micros(col("rep_tus")).as("ts"), col("chunk"))
 
-  private[graft] def prepareWmChunks(spark: SparkSession, dir: String): String = {
+  /** Write-once preparation of the per-chunk rep dataset for
+    * [[streamDedupWm]]. Exposed private[graft] so StreamDedupWmSpec can
+    * replay the same input.
+    */
+  private[graft] def prepareWmChunks(spark: SparkSession, dir: String): String =
+    prepareChunks("streamwm", dir)(wmChunkPrepFrame(spark, dir))
+
+  /** Write-once, fingerprint-keyed preparation of a multi-micro-batch
+    * stream input, shared by every chunked stream row: `frame`'s rows split
+    * by its `chunk` column into ordered single files `chunk_000.parquet`,
+    * ... with deterministic, strictly increasing mtimes (the file stream
+    * source takes files oldest-first, so this fixes the micro-batch order).
+    * Returns the chunk directory; `tag` names its cache.
+    */
+  private def prepareChunks(tag: String, dir: String)(frame: => DataFrame): String = {
     import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamwm", dir, "events.parquet")
+    val out = FileSources.cacheDir(tag, dir, "events.parquet")
     FileSources.writeOnce(out) { o =>
-      val raw = o + ".raw"
-      wmChunkPrepFrame(spark, dir)
+      val rawDir = new java.io.File(o + ".raw")
+      frame
         // one shuffle partition per chunk value -> exactly one data file
         // under each chunk= directory of the dynamic-partitioned write
         .repartition(col("chunk"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("chunk").parquet(raw)
-      flattenChunkDirs(new java.io.File(raw), o)
+        .partitionBy("chunk").parquet(rawDir.toString)
+      flattenChunkDirs(rawDir, o)
     }
     out
   }
 
-  /** Flatten a `chunk=N` dynamic-partitioned write into ordered single
-    * files `chunk_000.parquet`, ... with deterministic, strictly
-    * increasing mtimes (the file stream source takes files oldest-first,
-    * so this fixes the micro-batch order). Shared by every
-    * multi-micro-batch input preparation.
-    */
   private def flattenChunkDirs(rawDir: java.io.File, o: String): Unit = {
     import graft.sources.FileSources
     val chunkDirs = Option(rawDir.listFiles()).getOrElse(Array.empty)
@@ -673,33 +598,9 @@ object Events {
     * integer state is order-insensitive by design, and the gate asserts
     * exactly that.
     */
-  private[graft] def prepareTwsChunks(spark: SparkSession, dir: String): String = {
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamtws", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      val raw = o + ".raw"
-      readEvents(spark, dir)
-        .select(col("user_id"), col("value"), pmod(col("event_id"), lit(4)).as("chunk"))
-        // one shuffle partition per chunk value -> exactly one data file
-        // under each chunk= directory of the dynamic-partitioned write
-        .repartition(col("chunk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("chunk").parquet(raw)
-      flattenChunkDirs(new java.io.File(raw), o)
-    }
-    out
-  }
-
-  /** Set-and-restore the state-store provider class for the duration of a
-    * fully-executed streaming query. `transformWithState` REQUIRES the
-    * RocksDB provider in OSS Spark (typed state handles ride its column
-    * families); the default HDFS-backed store stays in force for every
-    * other row, so this wrapper keeps the requirement local to the query
-    * that has it.
-    */
-  private def withStateStoreProvider[T](spark: SparkSession, cls: String)(body: => T): T =
-    Confs.withConfs(spark, "spark.sql.streaming.stateStore.providerClass" -> cls)(body)
-
+  private[graft] def prepareTwsChunks(spark: SparkSession, dir: String): String =
+    prepareChunks("streamtws", dir)(readEvents(spark, dir)
+      .select(col("user_id"), col("value"), pmod(col("event_id"), lit(4)).as("chunk")))
 
   /** Cumulative per-user totals on Spark 4's `transformWithState` API —
     * the arbitrary-state StatefulProcessor surface (typed ValueState in a
@@ -726,31 +627,21 @@ object Events {
     val out = prepareTwsChunks(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, value DOUBLE")
-    withStreamPartitions(spark, 4) {
-      withStateStoreProvider(spark,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        import spark.implicits._
-        val src = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(out)
-          .select(col("user_id"), floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
-          .as[(Long, Long)]
-        val q = src.groupByKey(_._1)
-          .transformWithState(new graft.streaming.RunningTotals,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "n", "sum_v4")
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName("graft_transform_state")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_transform_state", "update",
+      StreamRun.partitions(4), StreamRun.RocksDb) {
+      import spark.implicits._
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(out)
+        .select(col("user_id"), floor(col("value") * 10000 + 0.5).cast("long").as("v4"))
+        .as[(Long, Long)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.RunningTotals,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF("user_id", "n", "sum_v4")
     }
-    spark.table("graft_transform_state")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n"), col("sum_v4"))).as("m"))
       .select(col("user_id"), col("m.n").as("n"),
@@ -992,56 +883,46 @@ object Events {
       project: DataFrame => DataFrame = intervalPairProjection,
       skipNoDataBatch: Boolean = false,
       streamPartitions: Int = 4): DataFrame = {
-    withEventReadConfs(spark) {
-      // Precondition (ADVICE r8): the eviction-replay oracles assume ALL
-      // input arrives in ONE micro-batch, so only the final watermark's
-      // eviction matters. With maxFilesPerTrigger=1, a multi-file events
-      // dataset would advance the watermark BETWEEN micro-batches — dropping
-      // late rows and emitting early null rows the batch oracle cannot
-      // replay. Fail loudly if a generator change ever splits the file.
-      requireSingleEventsFile(dir, "stream interval-join",
-        "the batch oracle cannot replay per-micro-batch watermark eviction")
-      def side(tpe: String, pre: String): DataFrame =
-        eventsStream(spark, dir)
-          .filter(col("event_type") === tpe)
-          .select(
-            col("event_id").as(s"${pre}_event_id"),
-            col("user_id").as(s"${pre}_user_id"),
-            col("tus").as(s"${pre}_tus"),
-            timestamp_micros(col("tus")).as(s"${pre}_tsw"))
-          .withWatermark(s"${pre}_tsw", "1 hour")
-      // Optimization r16: a caller whose projection emits every output
-      // row DURING data batches (plain inner and left-semi joins — matches
-      // emit on arrival; neither type emits at watermark eviction) opts
-      // out of the trailing NO-DATA micro-batch Spark schedules after the
-      // watermark advances: on a bounded stream that is about to stop it
-      // is pure state-eviction overhead — measured ~0.5-0.6 s of addBatch
-      // per row (STREAMBATCH probe: batch 1 with getBatch=0). It stays ON
-      // wherever eviction IS the emission: outer/full joins (null rows)
-      // and any append-mode AGGREGATION over the join (streamJoinAgg's
-      // windows finalize only when a later batch observes the advanced
-      // watermark — skipping the no-data batch there would emit nothing).
-      val ndConfs: Seq[(String, String)] =
-        if (skipNoDataBatch)
-          Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-        else Seq.empty
-      Confs.withConfs(spark, ndConfs: _*) { withStreamPartitions(spark, streamPartitions) {
-        val joined = side("click", "c").join(
-          side("purchase", "p"),
-          col("c_user_id") === col("p_user_id") &&
-            col("p_tsw") >= col("c_tsw") &&
-            col("p_tsw") <= col("c_tsw") + expr("INTERVAL 1 HOUR"),
-          joinType)
-        val q = project(joined)
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName(sinkName)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      } }
-      spark.table(sinkName)
+    // Precondition (ADVICE r8): the eviction-replay oracles assume ALL
+    // input arrives in ONE micro-batch, so only the final watermark's
+    // eviction matters. With maxFilesPerTrigger=1, a multi-file events
+    // dataset would advance the watermark BETWEEN micro-batches — dropping
+    // late rows and emitting early null rows the batch oracle cannot
+    // replay. Fail loudly if a generator change ever splits the file.
+    requireSingleEventsFile(dir, "stream interval-join",
+      "the batch oracle cannot replay per-micro-batch watermark eviction")
+    def side(tpe: String, pre: String): DataFrame =
+      eventsStream(spark, dir)
+        .filter(col("event_type") === tpe)
+        .select(
+          col("event_id").as(s"${pre}_event_id"),
+          col("user_id").as(s"${pre}_user_id"),
+          col("tus").as(s"${pre}_tus"),
+          timestamp_micros(col("tus")).as(s"${pre}_tsw"))
+        .withWatermark(s"${pre}_tsw", "1 hour")
+    // Optimization r16: a caller whose projection emits every output
+    // row DURING data batches (plain inner and left-semi joins — matches
+    // emit on arrival; neither type emits at watermark eviction) opts
+    // out of the trailing NO-DATA micro-batch Spark schedules after the
+    // watermark advances: on a bounded stream that is about to stop it
+    // is pure state-eviction overhead — measured ~0.5-0.6 s of addBatch
+    // per row (STREAMBATCH probe: batch 1 with getBatch=0). It stays ON
+    // wherever eviction IS the emission: outer/full joins (null rows)
+    // and any append-mode AGGREGATION over the join (streamJoinAgg's
+    // windows finalize only when a later batch observes the advanced
+    // watermark — skipping the no-data batch there would emit nothing).
+    val ndConfs: Seq[(String, String)] =
+      if (skipNoDataBatch)
+        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Seq.empty
+    StreamRun.memory(spark, sinkName, "append",
+      EventReadConfs ++ ndConfs :+ StreamRun.partitions(streamPartitions): _*) {
+      project(side("click", "c").join(
+        side("purchase", "p"),
+        col("c_user_id") === col("p_user_id") &&
+          col("p_tsw") >= col("c_tsw") &&
+          col("p_tsw") <= col("c_tsw") + expr("INTERVAL 1 HOUR"),
+        joinType))
     }
   }
 
@@ -1160,7 +1041,7 @@ object Events {
       // 0.66+0.13 s), which partition count cannot reach. Width 2 keeps a
       // genuinely partitioned state layout (1 would serialize the join at
       // any scale); on a real cluster this is sized per operator-chain
-      // keyspace at stream definition time, as the withStreamPartitions
+      // keyspace at stream definition time, as the StreamRun.partitions
       // doc states.
       streamPartitions = 2,
       project = _.groupBy(window(col("c_tsw"), "1 hour"), col("c_user_id"))
@@ -1430,25 +1311,15 @@ object Events {
       |             max(value) AS max_value
       |      FROM events GROUP BY user_id) u
       |  ON e.user_id = u.user_id""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
+    StreamRun.memory(spark, "graft_stream_static", "append", EventStreamConfs: _*) {
       val users = readEvents(spark, dir)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_user"), max(col("value")).as("max_value"))
-      val stream = eventsStream(spark, dir)
+      eventsStream(spark, dir)
         .select(col("event_id"), col("user_id"), col("value"))
-      withStreamPartitions(spark, 4) {
-        val q = stream.join(broadcast(users), Seq("user_id"))
-          .select(col("event_id"), col("user_id"), col("n_user"),
-            (col("value") === col("max_value")).as("is_user_max"))
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_static")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      spark.table("graft_stream_static")
+        .join(broadcast(users), Seq("user_id"))
+        .select(col("event_id"), col("user_id"), col("n_user"),
+          (col("value") === col("max_value")).as("is_user_max"))
     }
   }
 
@@ -1475,21 +1346,16 @@ object Events {
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val out = FileSources.cacheDir("streamsink", dir, "events.parquet")
-    withEventReadConfs(spark) {
-      FileSources.writeOnce(out) { o =>
-        val stream = eventsStream(spark, dir).select(col("event_id"), col("event_type"))
-        withStreamPartitions(spark, 4) {
-          val q = stream.writeStream
-            .format("parquet")
-            .option("path", s"$o/data")
-            .option("checkpointLocation", s"$o/chk")
-            .outputMode("append")
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
+    FileSources.writeOnce(out) { o =>
+      StreamRun(spark, EventStreamConfs: _*) {
+        eventsStream(spark, dir).select(col("event_id"), col("event_type"))
+          .writeStream
+          .format("parquet")
+          .option("path", s"$o/data")
+          .option("checkpointLocation", s"$o/chk")
+          .outputMode("append")
       }
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .groupBy(col("event_type"))
@@ -1605,24 +1471,12 @@ object Events {
   /** Chunked change-log for the streaming CDC twin: the full event row
     * set (key, order columns, payload) split into 4 single-file chunks by
     * `event_id mod 4` so `maxFilesPerTrigger=1` yields 4 deterministic
-    * micro-batches. Same fingerprint-keyed write-once cache as
-    * [[prepareTwsChunks]].
+    * micro-batches ([[prepareChunks]], like [[prepareTwsChunks]]).
     */
-  private[graft] def prepareCdcChunks(spark: SparkSession, dir: String): String = {
-    import graft.sources.FileSources
-    val out = FileSources.cacheDir("streamcdc", dir, "events.parquet")
-    FileSources.writeOnce(out) { o =>
-      val raw = o + ".raw"
-      readEvents(spark, dir)
-        .select(col("user_id"), col("tus"), col("event_id"), col("event_type"),
-          col("value"), pmod(col("event_id"), lit(4)).as("chunk"))
-        .repartition(col("chunk"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("chunk").parquet(raw)
-      flattenChunkDirs(new java.io.File(raw), o)
-    }
-    out
-  }
+  private[graft] def prepareCdcChunks(spark: SparkSession, dir: String): String =
+    prepareChunks("streamcdc", dir)(readEvents(spark, dir)
+      .select(col("user_id"), col("tus"), col("event_id"), col("event_type"),
+        col("value"), pmod(col("event_id"), lit(4)).as("chunk")))
 
   /** Streaming CDC materialized-view maintenance — the live twin of
     * [[cdcApply]], same oracle: the change log arrives as 4 micro-batches,
@@ -1645,33 +1499,23 @@ object Events {
     val out = prepareCdcChunks(spark, dir)
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "user_id LONG, tus LONG, event_id LONG, event_type STRING, value DOUBLE")
-    withStreamPartitions(spark, 4) {
-      withStateStoreProvider(spark,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-        import spark.implicits._
-        val src = spark.readStream
-          .schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(out)
-          .select(col("user_id"), col("tus"), col("event_id"),
-            col("event_type"), col("value"))
-          .as[(Long, Long, Long, String, Double)]
-        val q = src.groupByKey(_._1)
-          .transformWithState(new graft.streaming.CdcState,
-            org.apache.spark.sql.streaming.TimeMode.None(),
-            org.apache.spark.sql.streaming.OutputMode.Update())
-          .toDF("user_id", "last_tus", "last_eid", "last_type", "last_value",
-            "n_changes")
-          .writeStream
-          .outputMode("update")
-          .format("memory")
-          .queryName("graft_cdc_stream")
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_cdc_stream", "update",
+      StreamRun.partitions(4), StreamRun.RocksDb) {
+      import spark.implicits._
+      spark.readStream
+        .schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(out)
+        .select(col("user_id"), col("tus"), col("event_id"),
+          col("event_type"), col("value"))
+        .as[(Long, Long, Long, String, Double)]
+        .groupByKey(_._1)
+        .transformWithState(new graft.streaming.CdcState,
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          org.apache.spark.sql.streaming.OutputMode.Update())
+        .toDF("user_id", "last_tus", "last_eid", "last_type", "last_value",
+          "n_changes")
     }
-    spark.table("graft_cdc_stream")
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_changes"), col("last_tus"), col("last_eid"),
         col("last_type"), col("last_value"))).as("m"))
@@ -1968,26 +1812,15 @@ object Events {
     requireSingleEventsFile(dir, "streaming funnel",
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        import spark.implicits._
-        val q = eventsStream(spark, dir)
-          .select(col("user_id"), col("event_type"), col("tus"))
-          .as[FunnelStream.FunnelEvent]
-          .groupByKey(_.user_id)
-          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
-            FunnelStream.advance)
-          .writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_funnel_stream")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_funnel_stream", "append", EventStreamConfs: _*) {
+      import spark.implicits._
+      eventsStream(spark, dir)
+        .select(col("user_id"), col("event_type"), col("tus"))
+        .as[FunnelStream.FunnelEvent]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout)(
+          FunnelStream.advance)
     }
-    spark.table("graft_funnel_stream")
   }
 
   /** The funnel on `transformWithState` — [[funnelStream]]'s twin on the
@@ -2001,22 +1834,10 @@ object Events {
     requireSingleEventsFile(dir, "streaming funnel",
       "the cross-batch per-user ordering precondition only holds when the " +
         "whole stream is one micro-batch")
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        withStateStoreProvider(spark,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-          val q = graft.streaming.FunnelTws.stages(spark, dir).writeStream
-            .outputMode("append")
-            .format("memory")
-            .queryName("graft_funnel_tws")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-        }
-      }
+    StreamRun.memory(spark, "graft_funnel_tws", "append",
+      EventStreamConfs :+ StreamRun.RocksDb: _*) {
+      graft.streaming.FunnelTws.stages(spark, dir)
     }
-    spark.table("graft_funnel_tws")
   }
 
   /** Seasonal traffic heatmap: event counts by (day-of-week, hour-of-day)
@@ -2222,27 +2043,16 @@ object Events {
        |            FROM events) r) f""".stripMargin) { (spark, dir) =>
     import graft.functions.PolyHash
     PolyHash.register(spark)
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        val q = eventsStream(spark, dir)
-          .select(concat_ws("|",
-            col("event_id").cast("string"), col("user_id").cast("string"),
-            col("event_type"), col("tus").cast("string"),
-            expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").cast("string")).as("s"))
-          .select(expr("poly_hash(s)").as("fp"))
-          .agg(count(lit(1)).as("n_rows"), expr("bit_xor(fp)").as("xor_fp"),
-            min(col("fp")).as("min_fp"), max(col("fp")).as("max_fp"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName("graft_stream_checksum")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_stream_checksum", "complete", EventStreamConfs: _*) {
+      eventsStream(spark, dir)
+        .select(concat_ws("|",
+          col("event_id").cast("string"), col("user_id").cast("string"),
+          col("event_type"), col("tus").cast("string"),
+          expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").cast("string")).as("s"))
+        .select(expr("poly_hash(s)").as("fp"))
+        .agg(count(lit(1)).as("n_rows"), expr("bit_xor(fp)").as("xor_fp"),
+          min(col("fp")).as("min_fp"), max(col("fp")).as("max_fp"))
     }
-    spark.table("graft_stream_checksum")
   }
 
 
@@ -2271,37 +2081,31 @@ object Events {
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val out = FileSources.cacheDir("foreachbatch", dir, "events.parquet")
-    withEventReadConfs(spark) {
-      FileSources.writeOnce(out) { o =>
-        withStreamPartitions(spark, 4) {
-          val q = eventsStream(spark, dir)
-            .select(col("event_id"), col("event_type"))
-            .writeStream
-            .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-              // idempotent per batchId: replays overwrite their own
-              // partition directory, never append beside it
-              batch.groupBy(col("event_type"))
-                .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"))
-                .withColumn("batch", lit(batchId))
-                .write
-                .partitionBy("batch")
-                // Overwrite + dynamic = replace ONLY the partitions this
-                // batch carries (its own batch=<id> dir); Append would
-                // duplicate on replay, static Overwrite would erase
-                // every earlier batch
-                .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(s"$o/data")
-              ()
-            }
-            .option("checkpointLocation", s"$o/chk")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-        }
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
+    FileSources.writeOnce(out) { o =>
+      StreamRun(spark, EventStreamConfs: _*) {
+        eventsStream(spark, dir)
+          .select(col("event_id"), col("event_type"))
+          .writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+            // idempotent per batchId: replays overwrite their own
+            // partition directory, never append beside it
+            batch.groupBy(col("event_type"))
+              .agg(count(lit(1)).as("n"), sum(col("event_id")).as("sum_id"))
+              .withColumn("batch", lit(batchId))
+              .write
+              .partitionBy("batch")
+              // Overwrite + dynamic = replace ONLY the partitions this
+              // batch carries (its own batch=<id> dir); Append would
+              // duplicate on replay, static Overwrite would erase
+              // every earlier batch
+              .mode(org.apache.spark.sql.SaveMode.Overwrite)
+              .option("partitionOverwriteMode", "dynamic")
+              .parquet(s"$o/data")
+            ()
+          }
+          .option("checkpointLocation", s"$o/chk")
       }
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.parquet(s"$out/data")
       .groupBy(col("event_type"))
@@ -2744,24 +2548,18 @@ object Events {
       |FROM events GROUP BY event_type""".stripMargin) { (spark, dir) =>
     import graft.sources.FileSources
     val out = FileSources.cacheDir("statereader", dir, "events.parquet")
-    withEventReadConfs(spark) {
-      FileSources.writeOnce(out) { o =>
-        withStreamPartitions(spark, 4) {
-          val q = eventsStream(spark, dir)
-            .groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"),
-              sum(floor(col("value") * 10000 + 0.5).cast("long")).as("sum_fixed"))
-            .writeStream
-            .outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", s"$o/chk")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-        }
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
+    FileSources.writeOnce(out) { o =>
+      StreamRun(spark, EventStreamConfs: _*) {
+        eventsStream(spark, dir)
+          .groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(floor(col("value") * 10000 + 0.5).cast("long")).as("sum_fixed"))
+          .writeStream
+          .outputMode("update")
+          .format("noop")
+          .option("checkpointLocation", s"$o/chk")
       }
+      java.nio.file.Files.createFile(java.nio.file.Paths.get(o, "_SUCCESS")): Unit
     }
     spark.read.format("statestore").load(s"$out/chk")
       .select(col("key.event_type").as("event_type"),
@@ -2797,28 +2595,17 @@ object Events {
       |         CAST(count(*) AS BIGINT) AS n_buckets
       |  FROM b GROUP BY 1) g, wm
       |WHERE g.w_start_us + 7200000000 <= wm.w""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        val chained = eventsStream(spark, dir)
-          .select(timestamp_micros(col("tus")).as("tts"), col("event_type"))
-          .withWatermark("tts", "0 seconds")
-          .groupBy(window(col("tts"), "30 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n"))
-          .groupBy(window(window_time(col("window")), "2 hours"))
-          .agg(sum(col("n")).as("total"), count(lit(1)).as("n_buckets"))
-          .select(unix_micros(col("window.start")).as("w_start_us"),
-            col("total"), col("n_buckets"))
-        val q = chained.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_chained")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_stream_chained", "append", EventStreamConfs: _*) {
+      eventsStream(spark, dir)
+        .select(timestamp_micros(col("tus")).as("tts"), col("event_type"))
+        .withWatermark("tts", "0 seconds")
+        .groupBy(window(col("tts"), "30 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"))
+        .groupBy(window(window_time(col("window")), "2 hours"))
+        .agg(sum(col("n")).as("total"), count(lit(1)).as("n_buckets"))
+        .select(unix_micros(col("window.start")).as("w_start_us"),
+          col("total"), col("n_buckets"))
     }
-    spark.table("graft_stream_chained")
   }
 
   /** Two independent event streams with DIFFERENT watermark delays,
@@ -2860,30 +2647,19 @@ object Events {
        |      FROM f GROUP BY 1, 2)
        |SELECT w_start_us, event_type, n, sum_value
        |FROM b, wm WHERE b.w_start_us + 900000000 <= wm.w""".stripMargin) { (spark, dir) =>
-    withEventReadConfs(spark) {
-      withStreamPartitions(spark, 4) {
-        def branch(tpe: String, delay: String): DataFrame =
-          eventsStream(spark, dir)
-            .filter(col("event_type") === tpe)
-            .select(timestamp_micros(col("tus")).as("tts"), col("event_type"), col("value"))
-            .withWatermark("tts", delay)
-        val unioned = branch("click", "10 minutes")
-          .unionByName(branch("view", "30 minutes"))
-          .groupBy(window(col("tts"), "15 minutes"), col("event_type"))
-          .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
-          .select(unix_micros(col("window.start")).as("w_start_us"),
-            col("event_type"), col("n"), col("sum_value"))
-        val q = unioned.writeStream
-          .outputMode("append")
-          .format("memory")
-          .queryName("graft_stream_union")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination()
-        finally q.stop()
-      }
+    StreamRun.memory(spark, "graft_stream_union", "append", EventStreamConfs: _*) {
+      def branch(tpe: String, delay: String): DataFrame =
+        eventsStream(spark, dir)
+          .filter(col("event_type") === tpe)
+          .select(timestamp_micros(col("tus")).as("tts"), col("event_type"), col("value"))
+          .withWatermark("tts", delay)
+      branch("click", "10 minutes")
+        .unionByName(branch("view", "30 minutes"))
+        .groupBy(window(col("tts"), "15 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"), fixedSum(col("value")).as("sum_value"))
+        .select(unix_micros(col("window.start")).as("w_start_us"),
+          col("event_type"), col("n"), col("sum_value"))
     }
-    spark.table("graft_stream_union")
   }
 
   /** Feed pairs compared by [[ksDrift]] (name, side A, side B). */
@@ -3032,17 +2808,14 @@ object Events {
           org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
           org.apache.spark.sql.types.StructField("cents", org.apache.spark.sql.types.LongType)))
-        def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit = {
-          val src = spark.readStream.schema(schema).parquet(in.toString)
-          val q = spelling(src).writeStream
-            .outputMode("complete")
-            .format("memory")
-            .queryName(queryName)
-            .option("checkpointLocation", chk)
-            .start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
+        def runPhase(queryName: String)(spelling: DataFrame => DataFrame): Unit =
+          StreamRun(spark) {
+            spelling(spark.readStream.schema(schema).parquet(in.toString)).writeStream
+              .outputMode("complete")
+              .format("memory")
+              .queryName(queryName)
+              .option("checkpointLocation", chk)
+          }
         val baseMtime = 1600000000000L
         stage("half_even", col("event_id") % 2 === 0, baseMtime)
         // phase A: the Column-DSL spelling ("the r(N-1) code")
@@ -3162,28 +2935,22 @@ object Events {
         val emit = s"$work/emit"
         def runPhase(
             spelling: DataFrame => org.apache.spark.sql.Dataset[(Long, Long, Long)]): Unit =
-          withStreamPartitions(spark, 4) {
-            withStateStoreProvider(spark,
-              "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-              val src = spark.readStream.schema(schema).parquet(in.toString)
-              val q = spelling(src).toDF("user_id", "n", "sum_v4")
-                .writeStream
-                .foreachBatch {
-                  (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-                    batch.withColumn("batch", lit(batchId))
-                      .write
-                      .partitionBy("batch")
-                      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-                      .option("partitionOverwriteMode", "dynamic")
-                      .parquet(emit)
-                    ()
-                }
-                .outputMode("update")
-                .option("checkpointLocation", chk)
-                .start()
-              try q.processAllAvailable()
-              finally q.stop()
-            }
+          StreamRun(spark, StreamRun.partitions(4), StreamRun.RocksDb) {
+            spelling(spark.readStream.schema(schema).parquet(in.toString))
+              .toDF("user_id", "n", "sum_v4")
+              .writeStream
+              .foreachBatch {
+                (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+                  batch.withColumn("batch", lit(batchId))
+                    .write
+                    .partitionBy("batch")
+                    .mode(org.apache.spark.sql.SaveMode.Overwrite)
+                    .option("partitionOverwriteMode", "dynamic")
+                    .parquet(emit)
+                  ()
+              }
+              .outputMode("update")
+              .option("checkpointLocation", chk)
           }
         import spark.implicits._
         val baseMtime = 1600000000000L

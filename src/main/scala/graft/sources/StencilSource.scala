@@ -153,8 +153,21 @@ object StencilSource {
   private final class StencilMicroBatch(
       dims: Int, maxHalvings: Int, perBatch: Long, maxPoints: Long)
       extends MicroBatchStream
-      with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl {
+      with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
     import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+
+    /** Trigger.AvailableNow on the source itself: Spark keeps asking
+      * `latestOffset(start, getDefaultReadLimit)`, so the run is cut into
+      * `pointsPerBatch` micro-batches and ends at the `maxPoints` cap —
+      * the same batches the polling trigger runs. Without this mix-in
+      * Spark wraps the stream, asks for everything at once, and the run
+      * collapses into one batch. The cap is the snapshot "available now"
+      * stands for, so it must be finite.
+      */
+    override def prepareForTriggerAvailableNow(): Unit =
+      require(maxPoints != Long.MaxValue,
+        "Trigger.AvailableNow on the UNCAPPED stencil stream would consume " +
+          "forever; set the maxPoints option")
 
     override def initialOffset(): Offset = StencilOffset(0L)
 
@@ -169,17 +182,15 @@ object StencilSource {
       */
     override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
       val s = start.asInstanceOf[StencilOffset].n
-      // Honor the PASSED limit, not just the captured pointsPerBatch:
-      // Trigger.AvailableNow's wrapper calls this once with
-      // ReadLimit.allAvailable() and treats the answer as the TERMINAL
-      // offset — answering one perBatch there silently truncates the run
-      // to a single batch (code-review r12). allAvailable on an uncapped
-      // stream is a contradiction the require below rejects loudly.
+      // Honor the PASSED limit, not just the captured pointsPerBatch: a
+      // caller that asks for ReadLimit.allAvailable() (Trigger.Once) treats
+      // the answer as the TERMINAL offset — answering one perBatch there
+      // silently truncates the run to a single batch (code-review r12).
+      // Trigger.AvailableNow passes the default limit instead (see
+      // prepareForTriggerAvailableNow). The cap is finite here:
+      // toMicroBatchStream refuses an uncapped stream.
       val step = limit match {
         case _: org.apache.spark.sql.connector.read.streaming.ReadAllAvailable =>
-          require(maxPoints != Long.MaxValue,
-            "Trigger.AvailableNow/Once on the UNCAPPED stencil stream would " +
-              "consume forever; set the maxPoints option")
           maxPoints - s
         case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
           r.maxRows()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -30,68 +30,86 @@ object Sessionize {
     * bits would depend on micro-batch boundaries and the hash gate would
     * flap; integer sums cannot.
     */
-  final case class OpenSession(startUs: Long, endUs: Long, n: Long, sumFixed: Long)
+  final case class OpenSession(startUs: Long, endUs: Long, n: Long, sumFixed: Long) {
+    /** The event time (ms) the watermark must STRICTLY pass to close it. */
+    def closeMs: Long = endUs / 1000L + gapMicros / 1000L
+    def toSession(userId: Long): Session = Session(userId, startUs, endUs, n, sumFixed)
+  }
   final case class Session(
       user_id: Long, start_us: Long, end_us: Long, n: Long, sum_fixed: Long)
 
   private def fixed(v: Double): Long = math.floor(v * 10000 + 0.5).toLong
 
-  /** State transition: absorb new events (sorted by time), splitting into
-    * closed sessions whenever a gap exceeds gapMicros; keep the open tail in
-    * state with an event-time timeout at tail.end + gap.
+  /** THE session transition, shared verbatim by both state APIs
+    * ([[updateState]] on flatMapGroupsWithState, [[SessionizeTws]] on
+    * transformWithState — one function, as FunnelStream.step serves the
+    * funnel twins): absorb a non-empty batch of a user's events in time
+    * order into the open session, closing it whenever a gap exceeds
+    * gapMicros; returns the new open tail and the sessions closed on the
+    * way.
+    */
+  def step(
+      userId: Long,
+      open: Option[OpenSession],
+      events: Seq[Event]): (OpenSession, Vector[Session]) = {
+    val closed = Vector.newBuilder[Session]
+    var cur = open.orNull
+    for (e <- events.sortBy(_.tus)) {
+      if (cur == null) cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
+      else if (e.tus - cur.endUs > gapMicros) {
+        closed += cur.toSession(userId)
+        cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
+      } else cur = OpenSession(cur.startUs, math.max(cur.endUs, e.tus),
+        cur.n + 1, cur.sumFixed + fixed(e.value))
+    }
+    (cur, closed.result())
+  }
+
+  /** flatMapGroupsWithState adapter over [[step]]: keep the open tail in
+    * state with an event-time timeout at its close.
     */
   def updateState(
       userId: Long,
       events: Iterator[Event],
       state: GroupState[OpenSession]): Iterator[Session] = {
-    val sorted = events.toSeq.sortBy(_.tus)
-    if (sorted.isEmpty) {
+    val batch = events.toSeq
+    if (batch.isEmpty) {
       // Timeout fired: the watermark passed the open session's close.
       if (state.hasTimedOut && state.exists) {
         val s = state.get
         state.remove()
-        return Iterator(Session(userId, s.startUs, s.endUs, s.n, s.sumFixed))
+        return Iterator(s.toSession(userId))
       }
       return Iterator.empty
     }
-    val closed = Vector.newBuilder[Session]
-    var cur = state.getOption.orNull
-    for (e <- sorted) {
-      if (cur == null) cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
-      else if (e.tus - cur.endUs > gapMicros) {
-        closed += Session(userId, cur.startUs, cur.endUs, cur.n, cur.sumFixed)
-        cur = OpenSession(e.tus, e.tus, 1, fixed(e.value))
-      } else cur = OpenSession(cur.startUs, math.max(cur.endUs, e.tus),
-        cur.n + 1, cur.sumFixed + fixed(e.value))
-    }
+    val (cur, closed) = step(userId, state.getOption, batch)
     state.update(cur)
-    // Close when the watermark passes the session end + gap.
-    state.setTimeoutTimestamp(cur.endUs / 1000L + gapMicros / 1000L)
-    closed.result().iterator
+    state.setTimeoutTimestamp(cur.closeMs)
+    closed.iterator
   }
 
-  /** Streaming sessionization over the events parquet (bounded input used
-    * as a file-source stream). Returns the closed-sessions Dataset; callers
-    * start/await the query (see StreamingSpec).
+  /** The keyed session input both twins consume: the events file stream
+    * (graft.queries.Events.eventsStream, which pins the read confs and
+    * normalizes `ts` to micros `tus`) with a 0 s watermark on `event_time`.
     */
-  def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
+  private[streaming] def sessionEvents(
+      spark: SparkSession, dir: String): KeyValueGroupedDataset[Long, Event] = {
     import spark.implicits._
-    // Schema-adaptive ts → micros `tus` (graft.queries.Events.normalizeTs):
-    // the physical encoding of events.ts is a generator detail; confs for
-    // reading it are pinned here for direct callers (the gate row wraps the
-    // whole execution in a set-and-restore).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.queries.Events.normalizeTs(spark.readStream
-      .schema(schema)
-      .option("basePath", dir)
-      .parquet(s"$dir/events.parque[t]"))
+    graft.queries.Events.eventsStream(spark, dir)
       .select(col("user_id"), col("tus"), col("value"),
         timestamp_micros(col("tus")).as("event_time"))
       .withWatermark("event_time", "0 seconds")
       .as[Event]
       .groupByKey(_.user_id)
+  }
+
+  /** Streaming sessionization over the events parquet (bounded input used
+    * as a file-source stream). Returns the closed-sessions Dataset; callers
+    * run the query (see StreamingSpec).
+    */
+  def sessions(spark: SparkSession, dir: String): Dataset[Session] = {
+    import spark.implicits._
+    sessionEvents(spark, dir)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         updateState)
   }

@@ -1,6 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
@@ -41,6 +43,11 @@ object ScaleSample {
   private val KeyStride = 100000000L // far above any sf0.1 key
 
   private def gen(src: String, out: String, k: Int): Unit = {
+    // Shifted keys must stay below 2^32: coEdges and the wedge probe pack
+    // two vertex keys into one long as u·2^32 + v, so a larger key would
+    // silently corrupt the pairs. K ≤ 42 at this stride.
+    require(k.toLong * KeyStride <= (1L << 32),
+      s"K=$k shifts keys past 2^32 (stride $KeyStride); use K <= ${(1L << 32) / KeyStride}")
     val spark = graft.Bench.benchSession(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     def copies(df: DataFrame, shift: DataFrame => Int => DataFrame): DataFrame =
@@ -73,8 +80,9 @@ object ScaleSample {
     val spark = graft.Bench.benchSession(cpus)
     val results = qnames.map { n =>
       val fn = SparkEntry.queries(n)
-      try { fn(spark, dir).count(); graft.Bench.dropAllCaches(spark) } // warm-up
-      catch { case _: Throwable => () }
+      try fn(spark, dir).count() // warm-up
+      catch { case NonFatal(_) => () }
+      finally graft.Bench.dropAllCaches(spark)
       val t0 = System.nanoTime()
       val ok = try { fn(spark, dir).count(); true }
         catch { case e: Throwable =>

@@ -66,16 +66,19 @@ object StageProbe {
       fn(spark, dir).count()
       val wall = (System.nanoTime() - t0) / 1e9
       // Drain the listener bus by polling until the observed (stage, task)
-      // counts stabilize across two consecutive 100 ms snapshots (2 s cap)
-      // — a fixed sleep undercounted on a loaded box (ADVICE r16 #4).
-      var prev = (-1, -1L)
+      // counts stay unchanged across two consecutive 100 ms intervals (2 s
+      // cap) — a fixed sleep undercounted on a loaded box (ADVICE r16 #4),
+      // and the bus can stall for longer than one interval mid-drain.
+      def snapshot() = listener.synchronized((stages.size, stages.valuesIterator.map(_.tasks.toLong).sum))
+      var prev = snapshot()
+      var stable = 0
       var waitedMs = 0
-      var cur = listener.synchronized((stages.size, stages.valuesIterator.map(_.tasks.toLong).sum))
-      while (cur != prev && waitedMs < 2000) {
-        prev = cur
+      while (stable < 2 && waitedMs < 2000) {
         Thread.sleep(100)
         waitedMs += 100
-        cur = listener.synchronized((stages.size, stages.valuesIterator.map(_.tasks.toLong).sum))
+        val cur = snapshot()
+        stable = if (cur == prev) stable + 1 else 0
+        prev = cur
       }
       spark.sparkContext.removeSparkListener(listener)
       println(f"STAGEPROBE $q wall=$wall%.3f s stages=${stages.size}")

@@ -138,10 +138,12 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("StencilSource streaming: Trigger.AvailableNow consumes to maxPoints, not one batch") {
     spark.sparkContext.setLogLevel("ERROR")
-    // The AvailableNow wrapper calls latestOffset(start, ReadLimit.allAvailable())
-    // ONCE and treats the answer as the terminal offset — a source that
-    // answers with one pointsPerBatch there silently truncates the run
-    // (code-review r12). All 250 points must arrive, in order.
+    // All 250 points must arrive, in order (code-review r12: answering one
+    // pointsPerBatch to an all-available request truncated the run), and
+    // in ceil(250 / 100) = 3 data micro-batches: the source supports
+    // AvailableNow itself, so the read limit still cuts the run into
+    // pointsPerBatch batches instead of Spark's wrapper collapsing it to
+    // one.
     val q = spark.readStream.format("graft.sources.StencilSource")
       .option("dims", 2).option("maxHalvings", 7)
       .option("pointsPerBatch", 100).option("maxPoints", 250)
@@ -155,6 +157,9 @@ class ExtensionsSpec extends AnyFunSuite {
     val idx = spark.table("stencil_avail_now").collect().map(_.getInt(0)).sorted
     assert(idx.length == 250 && idx.head == 1 && idx.last == 250,
       s"expected the full 250-point prefix, got ${idx.length} rows")
+    val dataBatches = q.recentProgress.filter(_.numInputRows > 0).map(_.numInputRows).toSeq
+    assert(dataBatches == Seq(100L, 100L, 50L),
+      s"expected 3 data micro-batches of 100/100/50 points, got $dataBatches")
   }
 
   test("StencilSource streaming: alternating configs thrash the single-slot cache, never the rows") {
